@@ -122,15 +122,28 @@ object Bench {
     // that a min-of-2 still inherits ~1/4 of the time.
     val thirdPass: Map[String, (Double, Option[String])] =
       picked.map { q => q.name -> timedRun(q) }.toMap
-    val results = picked.map { q =>
-      val runs = Seq(firstPass(q.name), secondPass(q.name), thirdPass(q.name))
-      // a query that succeeds on EITHER sample is measurable: a
-      // transient first-run failure must not erase a valid second-run
-      // timing; only a query that failed both times is an error row
+    val line = resultLine(sfDir, floorSec, picked.map { q =>
+      q.name -> Seq(firstPass(q.name), secondPass(q.name), thirdPass(q.name))
+    })
+    Files.write(Paths.get("BENCH_OUT.json"),
+      (line + "\n").getBytes(StandardCharsets.UTF_8))
+    println(line)
+    spark.stop()
+  }
+
+  /** The one output line, from each query's three (seconds, error)
+    * samples in pass order. */
+  private[graft] def resultLine(sfDir: String, floorSec: Double,
+      perQuery: Seq[(String, Seq[(Double, Option[String])])]): String = {
+    val results = perQuery.map { case (name, runs) =>
+      // a query that succeeds on ANY of its three samples is
+      // measurable: a transient failure must not erase a valid timing
+      // from another pass; only a query that failed all three is an
+      // error row
       val okRuns = runs.filter(_._2.isEmpty)
       val err = if (okRuns.nonEmpty) None else runs.last._2
       val sec = (if (okRuns.nonEmpty) okRuns else runs).map(_._1).min
-      (q.name, sec, err, runs)
+      (name, sec, err, runs)
     }
     // JSON escape incl. ALL control chars (<0x20), and locale-free
     // number formatting — a comma-decimal default locale or a control
@@ -161,11 +174,6 @@ object Bench {
       }.mkString(",") + "]"
     }.mkString("{", ",", "}")
     val total = ok.map(_._2).sum
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"n_ok":${ok.size},"n_err":${results.size - ok.size},"floor_sec":${jnum(floorSec)},"samples":$samples,"sf":${jstr(sfDir)}}"""
-    Files.write(Paths.get("BENCH_OUT.json"),
-      (line + "\n").getBytes(StandardCharsets.UTF_8))
-    println(line)
-    spark.stop()
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"n_ok":${ok.size},"n_err":${results.size - ok.size},"floor_sec":${jnum(floorSec)},"samples":$samples,"sf":${jstr(sfDir)}}"""
   }
 }

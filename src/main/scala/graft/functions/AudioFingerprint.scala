@@ -134,7 +134,8 @@ object AudioFingerprint {
     * grid rather than adding a second sketch KIND keeps the measured
     * robustness class (neighbor-order comparisons; volume-scale and
     * sign-flip invariant) while doubling every banding block's width:
-    * ProbeWide (r17) measured same-family fixture pairs all within
+    * the r17 wide-threshold probe (SCALE.md) measured same-family
+    * fixture pairs all within
     * Hamming 7 of 128 with the closest cross-family pair at 31 —
     * where the refuted average-energy companion (mean comparisons
     * flip for cells NEAR the mean) spread true pairs to 31 with

@@ -22,7 +22,8 @@ import org.apache.spark.sql.types._
   * though the capped OUTPUT is tiny. Why not a rank window
   * (row_number <= k+1 → WindowGroupLimit): bounded too, but it pays a
   * per-partition SORT of every keyed row — measured 1.6-1.9× slower
-  * than the hash-agg collect at 10^4-10^6 widths (ProbeCap) — and
+  * than the hash-agg collect at 10^4-10^6 widths (r13 capped-banding
+  * probe, SCALE.md) — and
   * silently loses the map-side truncation when k crosses
   * spark.sql.window.group.limit.threshold. This aggregate keeps the
   * hash-agg shape (ObjectHashAggregate; map-side partial merge bounds

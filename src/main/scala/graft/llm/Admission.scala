@@ -409,8 +409,8 @@ object Admission {
   /** Store maintenance for a long-running service: fold the per-batch
     * `mb_<id>` subdirs into one compacted subdir, so arrival K stops
     * paying listing + parquet-footer overhead proportional to K (each
-    * micro-batch append leaves its own small files — measured in
-    * ProbeQ98Seq).
+    * micro-batch append leaves its own small files — measured by the
+    * r11 q98 N-arrival probe, SCALE.md).
     *
     * REPLAY-SAFETY: a subdir may be rewritten by a crash-replay of its
     * batch ([[processMicroBatch]]'s idempotence contract), so a folded

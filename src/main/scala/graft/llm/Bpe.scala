@@ -155,22 +155,14 @@ object Bpe {
     * first pool row is always accepted, so every cycle makes
     * progress and exhaustion is still detected by an empty pool. */
   def trainMergesBatched(docs: DataFrame, textCol: String, rounds: Int,
-                         batchSize: Int): DataFrame =
-    trainMergesBatchedFromWords(
-      wordCounts(docs, textCol).select(col("cnt"), col("syms")),
-      rounds, batchSize)
-
-  /** [[trainMergesBatched]] over a pre-built (cnt, syms) word table —
-    * the probe entry point (ProbeBpeBatch feeds a synthetic
-    * real-vocabulary-sized table directly, skipping the corpus pass). */
-  private[graft] def trainMergesBatchedFromWords(
-      wordTable: DataFrame, rounds: Int, batchSize: Int): DataFrame = {
+                         batchSize: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 100000,
       s"rounds out of range: $rounds")
     require(batchSize >= 1 && batchSize <= 512,
       s"batchSize out of range: $batchSize")
-    val spark = wordTable.sparkSession
-    var words = wordTable.localCheckpoint()
+    val spark = docs.sparkSession
+    var words = wordCounts(docs, textCol)
+      .select(col("cnt"), col("syms")).localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     val passOf = scala.collection.mutable.ArrayBuffer.empty[Int]
     var pass = 1

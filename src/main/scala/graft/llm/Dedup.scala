@@ -585,11 +585,11 @@ object Dedup {
     * ~25 B/keyed row — comfortably inside executor memory, and the
     * regime where the measured crossover favors broadcast: 2.4 s
     * broadcast vs 7.8 s sort-merge at 36×50k = 1.8M keyed rows;
-    * 9.7 s sort-merge vs 43.9 s broadcast-spill at 18M — ProbeGeom
-    * r16). Above it the join carries a MERGE hint. The dispatch reads
-    * the TRUE size (fp.count() × combination count), never the
-    * planner's Generate estimate, which reports the un-exploded
-    * child's bytes. */
+    * 9.7 s sort-merge vs 43.9 s broadcast-spill at 18M — r16
+    * geometry probe, SCALE.md). Above it the join carries a MERGE
+    * hint. The dispatch reads the TRUE size (fp.count() × combination
+    * count), never the planner's Generate estimate, which reports the
+    * un-exploded child's bytes. */
   val BroadcastKeyedRows = 4000000L
 
   /** The MEMBERSHIP PROBE's own, tighter broadcast bound. The probe's
@@ -600,12 +600,12 @@ object Dedup {
     * explicit batch-side build measured 2× SLOWER than sort-merge at
     * 1.8M keyed rows (q103 at 500k docs: 42.1 s merge vs 89.2 s
     * broadcast, same session), even though the identical probe
-    * ISOLATED measures the same build 2.5× FASTER (ProbeTouch,
-    * 450k store × 50k batch: 6.5-13.6 s broadcast vs 18.0-25.2 s
-    * merge). The embedded measurement is binding because embedding is
-    * the contract. The bound sits just above the largest
+    * ISOLATED measures the same build 2.5× FASTER (r13 touch probe,
+    * SCALE.md; 450k store × 50k batch: 6.5-13.6 s broadcast vs
+    * 18.0-25.2 s merge). The embedded measurement is binding because
+    * embedding is the contract. The bound sits just above the largest
     * embedded-measured-good decade — 180k keyed rows (5k-doc batches:
-    * q103 flat at sf1, and ProbeTouch at 495k×5k measured the
+    * q103 flat at sf1, and the r13 touch probe at 495k×5k measured the
     * broadcast 2.7× faster than the pre-dispatch planner choice) —
     * and well under the embedded-measured-bad 1.8M.
     *
@@ -632,14 +632,14 @@ object Dedup {
     * BroadcastHashJoin falls back to interpreted eval), so that chain
     * ran interpreted PER JOINED ROW and dominated pair-gen wall time
     * (measured 6.2× on the 128-bit dense image fixture at sf0.1:
-    * 9.0 s → 1.45 s, identical output — ProbeWideTime r17). Here each
-    * BLOCK is tested once (`cleanPred`, `blocks` tests instead of
-    * C(blocks, keyBlocks) combination tests), folded into a bitmask,
-    * and the first-all-clean-combination index comes from a 2^blocks
-    * lookup table (blocks ≤ 16 — every autoGeometry result for
-    * maxHamming ≤ 14 qualifies) or, for wider explicit geometries, a
-    * per-combination when-chain over the PRECOMPUTED bitmask (one
-    * integer AND per arm instead of one or two 64-bit mask xor-tests).
+    * 9.0 s → 1.45 s, identical output — r17 wide pair-gen timing
+    * probe, SCALE.md). Here each BLOCK is tested once (`cleanPred`,
+    * `blocks` tests instead of C(blocks, keyBlocks) combination tests),
+    * folded into a bitmask, and the first-all-clean-combination index
+    * comes from a 2^blocks lookup table (blocks ≤ 16 — every autoGeometry
+    * result for maxHamming ≤ 14 qualifies) or, for wider explicit
+    * geometries, a per-combination when-chain over the PRECOMPUTED bitmask
+    * (one integer AND per arm instead of one or two 64-bit mask xor-tests).
     * Returns −1 when no combination is clean, exactly like the chain
     * it replaces. */
   private def canonicalCombo(cleanPred: Seq[Column],
@@ -708,7 +708,7 @@ object Dedup {
     * combination count to the threshold you ACTUALLY run, not the
     * loosest one you might: at maxHamming=3, blocks=4/keyBlocks=1 is
     * still exhaustive with 4 probe keys instead of 36, and the
-    * round-14 5M measurement (ProbeQ101Mit, SCALE.md) shows pair
+    * round-14 5M percolation measurement (SCALE.md) shows pair
     * generation dropping 19× with bit-identical output. Pass
     * `blocks = 0, keyBlocks = 0` to let the operator size itself from
     * `maxHamming` via [[autoGeometry]] — the measured dispatch rule,
@@ -784,10 +784,10 @@ object Dedup {
       // the estimate lands under the 10 MB broadcast threshold while
       // the true exploded side is GIGABYTES (measured: a 6.5 GiB
       // driver-side broadcast build at 500k docs × 120 combos,
-      // spilling the block store — ProbeGeom r16). The dispatch is
-      // the hammingProbeTouch `bruteBelow` discipline applied to the
-      // join strategy: fp is materialized by this operator's contract,
-      // so counting it is one cheap cached-scan job, and the TRUE
+      // spilling the block store — r16 geometry probe, SCALE.md). The
+      // dispatch is the hammingProbeTouch `bruteBelow` discipline applied
+      // to the join strategy: fp is materialized by this operator's
+      // contract, so counting it is one cheap cached-scan job, and the TRUE
       // exploded row count picks the side. Small (≤ BroadcastKeyedRows
       // ≈ tens of MB true size): explicit broadcast — measured 2.4 vs
       // 7.8 s at 50k docs, the sort pays nothing back. Large: a MERGE
@@ -848,9 +848,9 @@ object Dedup {
       // a 10^7-struct array per (combo, key) task, the exact executor
       // OOM the cap exists to prevent), and a rank-window form pays a
       // per-partition sort of every keyed row (measured 1.6-1.9×
-      // slower, ProbeCap). The cap lowest ids = the streaming twin's
-      // arrival-order semantics under ordered ids; the true bucket
-      // size rides along as the sentinel witness.
+      // slower, r13 capped-banding probe, SCALE.md). The cap lowest
+      // ids = the streaming twin's arrival-order semantics under ordered
+      // ids; the true bucket size rides along as the sentinel witness.
       val grouped = keyed
         .groupBy(col("combo"), col("key"))
         .agg(graft.functions.BoundedMinK.collect_min_k(
@@ -906,10 +906,10 @@ object Dedup {
     * broadcast row and a codegen xor/popcount kernel
     * ([[graft.functions.HammingKernels]]) tests every store row
     * against all of them during the bare columnar scan. Measured at a
-    * 5M-row store (ProbeTouch): the banding probe's 36-combo map-side
-    * key expansion alone costs 30.4 s materialized (the probe ~15 s)
-    * vs 0.42 s for the bare scan — the kernel keeps the scan bare, so
-    * a ~500-doc arrival pays ~|store|·|batch| popcounts ≈ the scan
+    * 5M-row store (r13 touch probe, SCALE.md): the banding probe's
+    * 36-combo map-side key expansion alone costs 30.4 s materialized (the
+    * probe ~15 s) vs 0.42 s for the bare scan — the kernel keeps the scan
+    * bare, so a ~500-doc arrival pays ~|store|·|batch| popcounts ≈ the scan
     * floor. Above the threshold the per-row popcount sweep loses to
     * the fixed 36-key expansion and the banding probe takes over.
     * Both paths are exact (spec-pinned equal); the brute path's only
@@ -1072,11 +1072,11 @@ object Dedup {
   // key space ×~8000, collision term at 5M docs ≈ 3×10^6 instead of
   // 5×10^12. The similarity contract changes with the fingerprint
   // (Hamming over 128 bits), so the operating thresholds are
-  // MEASURED, not assumed: ProbeWide (r17) brute-forced the fixture
-  // twin distributions first — image dHash‖aHash true pairs (64-bit
-  // h≤7 truth) all sit at h128 ≤ 8 with the closest non-pair at 27;
-  // the doubled-grid audio fingerprint's same-family pairs all sit at
-  // h ≤ 7 with the closest cross-family pair at 31.
+  // MEASURED, not assumed: the r17 wide-threshold probe (SCALE.md)
+  // brute-forced the fixture twin distributions first — image dHash‖aHash
+  // true pairs (64-bit h≤7 truth) all sit at h128 ≤ 8 with the closest
+  // non-pair at 27; the doubled-grid audio fingerprint's same-family pairs
+  // all sit at h ≤ 7 with the closest cross-family pair at 31.
 
   /** [[autoGeometry]] for a 128-bit fingerprint: fewest combination
     * keys subject to the same pigeonhole bound, a HIGHER key-width
@@ -1173,7 +1173,7 @@ object Dedup {
     * 0`). The point of the width: the quadratic-regime sentinel
     * threshold that the 64-bit path crosses near 10^6 docs
     * (combos·n²/2^15) is pushed out by a factor of ~2^13 at the
-    * default h≤7 geometry — ProbeWide's decade table (SCALE.md r17)
+    * default h≤7 geometry — the r17 wide decade table (SCALE.md)
     * measures the 5M-doc leg FLAT where the 64-bit path took
     * 548.8 s. */
   def hammingCandidatesFromFp128(fp: DataFrame, blocks: Int,
@@ -1221,7 +1221,7 @@ object Dedup {
     // halves) → canonical index via [[canonicalCombo]] (the r17
     // lookup-table rewrite — the nested combination-mask CASE chain it
     // replaces ran interpreted per joined row and dominated this
-    // operator's wall time: 9.0 → 1.45 s at sf0.1, ProbeWideTime)
+    // operator's wall time: 9.0 → 1.45 s at sf0.1, SCALE.md)
     val blockClean = (0 until blocks).map { b =>
       val ml = rangeMask(offsets(b), math.min(offsets(b) + widths(b), 64))
       val mh = rangeMask(math.max(offsets(b), 64) - 64,
@@ -1554,9 +1554,9 @@ object Dedup {
     // LlmSpec). The clone is MEMOIZED per caller session and reused
     // across invocations: a fresh newSession() pays an executor-side
     // first-job session-state setup on EVERY call (~0.8 s at sf0.1,
-    // measured in ProbeCcClone — a reused clone's second round drops
-    // back to the caller session's round time), which the round-12
-    // per-invocation clone charged to every CC invocation (q67
+    // measured by the r13 CC clone probe, SCALE.md — a reused clone's
+    // second round drops back to the caller session's round time), which
+    // the round-12 per-invocation clone charged to every CC invocation (q67
     // 2.09 → 3.25 s). The caller's runtime conf is copied onto the
     // clone at entry (diff-only — the pair share SparkConf defaults)
     // so ANSI/timezone/caseSensitive behave as the caller set them;

@@ -376,11 +376,11 @@ object Multimodal {
     * through 5M (SCALE.md r17).
     *
     * DIFFERENT SIMILARITY CONTRACT, measured before shipping
-    * (ProbeWide r17): pairs at combined dHash+aHash Hamming <=
-    * `maxHamming` over 128 bits. The default 8 is the measured
-    * operating point matching the 64-bit h≤7 one on every fixture
-    * family: true 64-bit pairs all sit at h128 ≤ 8 (dense AND sparse
-    * image fixtures, 2000 ids brute-forced), JPEG re-encode twins at
+    * (r17 wide-threshold probe, SCALE.md): pairs at combined
+    * dHash+aHash Hamming <= `maxHamming` over 128 bits. The default 8 is
+    * the measured operating point matching the 64-bit h≤7 one on every
+    * fixture family: true 64-bit pairs all sit at h128 ≤ 8 (dense AND
+    * sparse image fixtures, 2000 ids brute-forced), JPEG re-encode twins at
     * h128 = 0, and the closest non-pair at 27 — so at the defaults
     * the two operators emit IDENTICAL pair sets on the fixtures
     * (spec-pinned), while the wide key space holds bucket occupancy
@@ -528,7 +528,8 @@ object Multimodal {
     * [[Dedup.hammingCandidatesFromFp128]]: the audio leg of the
     * r17 wide-banding escape (see [[imageNearDupPairsWide]] for the
     * 64-bit ceiling it escapes). DIFFERENT SIMILARITY CONTRACT,
-    * measured before shipping (ProbeWide r17, family-membership
+    * measured before shipping (r17 wide-threshold probe, SCALE.md;
+    * family-membership
     * truth): pairs at Hamming <= `maxHamming` over the 128 grid
     * bits. The default 7 is the measured operating point — dense
     * fixture same-family pairs all at h ≤ 7, sparse at h ≤ 6, the

@@ -163,8 +163,8 @@ object Sampling {
     * cap x sources x partitions rows — never the corpus — and the
     * per-source final task handles cap x partitions rows, so a
     * 10^9-doc hot domain is NOT a 10^9-row straggler sort. Measured
-    * (ProbeQ97, 5M docs, 90% in one source, cap=1000): 1.4 s vs 17 s
-    * for the hand-built selection below.
+    * (r10 q97 cap probe, SCALE.md; 5M docs, 90% in one source,
+    * cap=1000): 1.4 s vs 17 s for the hand-built selection below.
     *
     * ABOVE the threshold the rewrite is off and this degenerates to a
     * full-corpus exchange + one sort task per source — for that regime

@@ -53,17 +53,10 @@ object Revenue {
     * evader, one with R+F is a written-up fine at 10.00 per unit
     * quantity (exact integer cents by construction).
     */
-  def adsFareRevenueServiceTypeMonthly(s: SparkSession, dir: String): DataFrame =
-    adsFareRevenueServiceTypeMonthlyFrom(Tables.region(s, dir),
-      Tables.orders(s, dir), Tables.lineitem(s, dir))
-
-  /** Same plan over caller-supplied inputs — the hook the bucketed-
-    * layout path uses (`tools/ProbeQ56Bucketed`): pass `spark.table`
-    * handles of facts bucketed by orderkey and the orderkey join (and
-    * the fine-leg pre-aggregation, which groups on the same key)
-    * plans with ZERO exchanges on the bucketed sides. */
-  def adsFareRevenueServiceTypeMonthlyFrom(regionRaw: DataFrame,
-      ordersRaw: DataFrame, lineitemRaw: DataFrame): DataFrame = {
+  def adsFareRevenueServiceTypeMonthly(s: SparkSession, dir: String): DataFrame = {
+    val regionRaw = Tables.region(s, dir)
+    val ordersRaw = Tables.orders(s, dir)
+    val lineitemRaw = Tables.lineitem(s, dir)
     val region = broadcast(regionRaw
       .select(col("r_regionkey"), col("r_name").as("region_id")))
 
@@ -186,16 +179,10 @@ object Revenue {
     * cents, ext_cents·(100−disc_pct) div 100, computed per leg BEFORE
     * the sum so the truncation point is identical on both engines.
     */
-  def adsRevenueProportionProductTypeMonthly(s: SparkSession, dir: String): DataFrame =
-    adsRevenueProportionProductTypeMonthlyFrom(Tables.region(s, dir),
-      Tables.orders(s, dir), Tables.lineitem(s, dir))
-
-  /** Input-parameterized twin (see
-    * [[adsFareRevenueServiceTypeMonthlyFrom]]): with facts bucketed by
-    * orderkey the shuffle the sf100 measurement showed carrying this
-    * query disappears into the layout. */
-  def adsRevenueProportionProductTypeMonthlyFrom(regionRaw: DataFrame,
-      ordersRaw: DataFrame, lineitemRaw: DataFrame): DataFrame = {
+  def adsRevenueProportionProductTypeMonthly(s: SparkSession, dir: String): DataFrame = {
+    val regionRaw = Tables.region(s, dir)
+    val ordersRaw = Tables.orders(s, dir)
+    val lineitemRaw = Tables.lineitem(s, dir)
     val region = broadcast(regionRaw
       .select(col("r_regionkey"), col("r_name").as("region_id")))
 

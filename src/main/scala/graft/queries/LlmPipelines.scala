@@ -436,9 +436,9 @@ object LlmPipelines {
     * which DuckDB recomputes by brute force, pinning the ground-truth
     * side — and a recall floor computed by joining the IVF hits
     * against that exact top-k. The floor (0.75) sits under the
-    * measured recall with margin (tools/ProbeIvf at nCentroids=16,
-    * nProbe=8: 0.884 at sf0.001, 0.828 at sf0.01, 0.856 at sf0.1 —
-    * stable because the centroid sample is a deterministic hash
+    * measured recall with margin (r6 IVF recall probe, SCALE.md; at
+    * nCentroids=16, nProbe=8: 0.884 at sf0.001, 0.828 at sf0.01, 0.856 at
+    * sf0.1 — stable because the centroid sample is a deterministic hash
     * order, not a data order; a partitioning defect that strands
     * queries' neighbor lists drops recall toward
     * nProbe/nCentroids·k-random and fails it). The probe fraction
@@ -2875,10 +2875,10 @@ object LlmPipelines {
     * is one IEEE double division (identical bit-for-bit in both
     * engines), ties break on doc_id, and the 25% cut is pure integer
     * arithmetic (rn·4 <= N — no division). Empty docs never rank.
-    * HONESTY NOTE (measured, ProbeDsir/this oracle's sums): the
-    * fixture's `lang` label carries ZERO lexical signal — every
-    * language draws from the same synthetic vocabulary — so the
-    * per-lang kept counts hover at ~25% each; the operator's value
+    * HONESTY NOTE (measured: r10 DSIR probe, SCALE.md, and this
+    * oracle's sums): the fixture's `lang` label carries ZERO lexical
+    * signal — every language draws from the same synthetic vocabulary — so
+    * the per-lang kept counts hover at ~25% each; the operator's value
     * here is the exact mechanism, pinned end-to-end, not a separation
     * this data cannot contain. The 25% cut runs as
     * [[graft.ops.Sampling.topFractionByRate]]'s bins-bounded
@@ -2900,11 +2900,12 @@ object LlmPipelines {
       // r18 REFUTED attempt, kept as the r17-shape on purpose: a
       // shared-aggregation dual-LM trainer (one (all, en-slice)
       // conditional count per n-gram order feeding both LMs) was
-      // built and A/B-measured same-JVM (tools/ProbeShapes, sf0.1 +
-      // sf1): +2 AQE stage-jobs, no wall/cpu win, and the shared form
-      // structurally LOSES the `lang = 'en'` scan pushdown the
+      // built and A/B-measured same-JVM (r18 shapes probe, SCALE.md;
+      // sf0.1 + sf1): +2 AQE stage-jobs, no wall/cpu win, and the shared
+      // form structurally LOSES the `lang = 'en'` scan pushdown the
       // en-slice subtrees get here — at a selective slice the two-LM
-      // form reads less data, not more. See OPTIMIZATION_r18.md.
+      // form reads less data, not more. The round-18 account is
+      // VERDICT.md §4 ("Refutations") and commits 8ec368c/4ea73ae.
       val tgt = LangModel.trainBigramLm(
         corpus.where(col("lang") === "en"), "text")
       val src = LangModel.trainBigramLm(corpus, "text")
@@ -3594,10 +3595,11 @@ object LlmPipelines {
 
   /** The q106 oracle: q80's generated pixel/bit table evaluated at the
     * WIDE contract — pairs whose combined dHash + aHash disagreement
-    * count over all 128 bits is <= 8 (the ProbeWide r17 measured
-    * operating point), one `hamming` column. Same CTEs as [[q80Oracle]]
-    * (the fingerprint definition did not change — only its WIDTH as a
-    * banding key), so the two oracles stay in sync by construction. */
+    * count over all 128 bits is <= 8 (the operating point the r17
+    * wide-threshold probe measured, SCALE.md), one `hamming` column. Same
+    * CTEs as [[q80Oracle]] (the fingerprint definition did not change —
+    * only its WIDTH as a banding key), so the two oracles stay in sync by
+    * construction. */
   private def q106Oracle: String = {
     val pixCols = (for (y <- 0 until 8; x <- 0 until 9)
       yield s"${q80Gray(x, y)} AS p${y * 9 + x}").mkString(",\n    ")
@@ -3640,9 +3642,9 @@ object LlmPipelines {
     * (10, 2) geometry keys carry >= 24 bits — same banding join
     * shape, collision term ~2^13 smaller, decade table flat through
     * 5M (SCALE.md r17). Contract: combined Hamming <= 8 over 128
-    * bits, the measured operating point (ProbeWide r17: true 64-bit
-    * pairs all <= 8, closest non-pair 27, JPEG re-encode twins at 0).
-    * Both hashes come from ONE codegen'd decode
+    * bits, the measured operating point (r17 wide-threshold probe,
+    * SCALE.md: true 64-bit pairs all <= 8, closest non-pair 27, JPEG
+    * re-encode twins at 0). Both hashes come from ONE codegen'd decode
     * ([[graft.functions.PerceptualHash.d_a_hash]]). */
   val q106 = QueryDef(
     "q106_image_neardup_wide",
@@ -3704,10 +3706,11 @@ object LlmPipelines {
     * banding: same energy-gradient sketch at double the grid
     * resolution, default geometry (9, 2) = q84's 36 combination keys
     * at ~28 bits instead of ~15. Contract: Hamming <= 7 over the 128
-    * grid bits, the measured operating point (ProbeWide r17:
-    * same-family fixture pairs all <= 7, closest cross-family 31 —
-    * the wide pair set IS the family-clique truth, strictly beyond
-    * q84's, whose coarse grid loses ~0.2% of family pairs). */
+    * grid bits, the measured operating point (r17 wide-threshold
+    * probe, SCALE.md: same-family fixture pairs all <= 7, closest
+    * cross-family 31 — the wide pair set IS the family-clique truth,
+    * strictly beyond q84's, whose coarse grid loses ~0.2% of family
+    * pairs). */
   val q107 = QueryDef(
     "q107_audio_neardup_wide",
     (s, dir) => {

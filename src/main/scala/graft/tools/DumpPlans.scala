@@ -9,7 +9,9 @@ import graft.core.Sessions
   * physical plan to `<outDir>/<name>_<tag>.txt` — the round's
   * before/after plan evidence (plans/rNN/). Usage:
   *   runMain graft.tools.DumpPlans <outDir> <tag> [sfDir] [nameFilter...]
-  * With no filters, dumps every registered query.
+  * With no filters, dumps every registered query. Exits non-zero when
+  * any picked query fails to plan, so a broken dump never passes for
+  * evidence.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -23,7 +25,7 @@ object DumpPlans {
     val picked =
       if (filters.isEmpty) graft.SparkEntry.registry
       else graft.SparkEntry.registry.filter(q => filters.exists(q.name.contains))
-    picked.foreach { q =>
+    val failed = picked.count { q =>
       try {
         val df = q.fn(spark, sfDir)
         val plan = df.queryExecution.explainString(
@@ -31,12 +33,18 @@ object DumpPlans {
         Files.write(outDir.resolve(s"${q.name}_$tag.txt"),
           plan.getBytes(StandardCharsets.UTF_8))
         println(s"[dump-plans] wrote ${q.name}_$tag.txt")
+        false
       } catch {
         case e: Throwable =>
           println(s"[dump-plans] ${q.name} ERROR ${e.getClass.getSimpleName}: " +
             Option(e.getMessage).getOrElse("").take(120))
+          true
       } finally spark.catalog.clearCache()
     }
     spark.stop()
+    if (failed > 0) {
+      System.err.println(s"[dump-plans] $failed of ${picked.size} queries failed")
+      sys.exit(1)
+    }
   }
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Sessions, Tables}
 
-/** Embeddings-only decade generator for the q96 probe (ProbeQ96): the
-  * GenScale rotation family is exhausted past 64 replicas (only 64
-  * distinct cyclic shifts of a 64-dim vector exist), so the next
+/** Embeddings-only decade generator for the r10 q96 IVF decade probe
+  * (SCALE.md): the GenScale rotation family is exhausted past 64 replicas
+  * (only 64 distinct cyclic shifts of a 64-dim vector exist), so the next
   * decade uses a per-replica SIGN-FLIP bijection instead: replica k
   * multiplies dimension j by -1 iff bit j of a per-replica 64-bit hash
   * mask is set (mask 0 for k=0, so replica 0 is the input verbatim).

@@ -361,9 +361,10 @@ class MultimodalSpec extends AnyFunSuite {
         PerceptualHash.dhash64(b), s"gif dhash id=$id")
     }
     // JPEG is lossy: at real image sizes the hash sits within the
-    // banding radius of the uncompressed twin. Measured (ProbeJpeg):
-    // 72x64 → Hamming 0 at every quality 0.75-1.0; the pathological
-    // 9x8 native size → ≤7 only at quality 1.0. Pin both regimes.
+    // banding radius of the uncompressed twin. Measured (r9 JPEG
+    // re-encode probe, SCALE.md): 72x64 → Hamming 0 at every quality
+    // 0.75-1.0; the pathological 9x8 native size → ≤7 only at quality 1.0.
+    // Pin both regimes.
     (0L until 60L).foreach { id =>
       val b = Multimodal.syntheticBmp(id)
       val up = Multimodal.resizeBmpBytes(b, 72, 64).get
@@ -648,7 +649,8 @@ class MultimodalSpec extends AnyFunSuite {
     } yield (a, b, h)).toSet
     assert(got == want, s"got ${got.size} pairs, want ${want.size}")
     assert(want.nonEmpty, "fixture families must produce near-dup pairs")
-    // the ProbeWide r17 operating-point claim, end to end: the wide
+    // the r17 wide-threshold probe's operating-point claim (SCALE.md),
+    // end to end: the wide
     // contract at h<=8 emits EXACTLY the 64-bit h<=7 pair set on the
     // fixture (true pairs all within 8; closest non-pair at 27)
     val narrow = Multimodal.imageNearDupPairs(imgs, "media_id", "payload")
@@ -664,9 +666,10 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("wide image banding finds BMP/JPEG re-encode twins end to end") {
-    // the r9 JPEG discipline applied to the wide contract: ProbeWide
-    // measured the re-encode twins at h128 = 0, so every (bmp, jpeg)
-    // twin must surface through the single-decode kernel + wide banding
+    // the r9 JPEG discipline applied to the wide contract: the r17
+    // wide-threshold probe (SCALE.md) measured the re-encode twins at
+    // h128 = 0, so every (bmp, jpeg) twin must surface through the
+    // single-decode kernel + wide banding
     val ids = (0L until 80L).toSeq
     def jpegOf(id: Long): Array[Byte] = {
       val up = Multimodal.resizeBmpBytes(Multimodal.syntheticBmp(id), 72, 64).get
@@ -712,7 +715,8 @@ class MultimodalSpec extends AnyFunSuite {
     } yield (a, b, h)).toSet
     assert(got == want, s"got ${got.size} pairs, want ${want.size}")
     assert(want.nonEmpty, "fixture families must produce near-dup pairs")
-    // the ProbeWide r17 family-truth claim, end to end: at h<=7 over
+    // the r17 wide-threshold probe's family-truth claim (SCALE.md),
+    // end to end: at h<=7 over
     // the doubled grid the wide pair set IS the family-clique truth —
     // every same-family pair (max measured distance 7), zero
     // cross-family pairs (closest measured at 31)
@@ -737,7 +741,8 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("wide banding geometry: auto table, explicit equivalence, loud failures, capped sentinels") {
     import graft.llm.Dedup
-    // the measured dispatch points of autoGeometry128 (ProbeWide r17)
+    // the measured dispatch points of autoGeometry128 (r17
+    // wide-threshold probe, SCALE.md)
     assert(Dedup.autoGeometry128(7) == (9, 2))   // 36 keys of >=28 bits
     assert(Dedup.autoGeometry128(8) == (10, 2))  // 45 keys of >=24 bits
     assert(Dedup.autoGeometry128(3) == (4, 1))   // 4 keys of 32 bits

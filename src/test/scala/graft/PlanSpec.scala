@@ -93,9 +93,10 @@ class PlanSpec extends AnyFunSuite {
     // frame's 16 bytes/doc — at ~500k docs that sits UNDER the 10 MB
     // broadcast threshold while the true exploded side is gigabytes
     // (measured: a 6.5 GiB driver-side broadcast build at 500k docs ×
-    // 120 combos, ProbeGeom r16). The operator therefore dispatches on
-    // fp.count() × combos, never the estimate: explicit broadcast in
-    // the provably-small regime, a MERGE hint above it.
+    // 120 combos, r16 geometry probe, SCALE.md). The operator
+    // therefore dispatches on fp.count() × combos, never the estimate:
+    // explicit broadcast in the provably-small regime, a MERGE hint above
+    // it.
     import spark.implicits._
     val small = graft.core.Caching.eager(
       (0L until 2000L).map(i => (i, i * 2654435761L)).toDF("id", "sh"))
